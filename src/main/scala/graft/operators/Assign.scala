@@ -14,88 +14,35 @@ import graft.functions.VecFunctions._
   *
   * Two implementations, cross-checked in tests:
   *
-  *  1. [[withNearest]] — *expression form*: the argmin is unrolled into a
-  *     `least(d0..dK)` + first-match CASE chain over literal centroids.
-  *     One narrow map stage, zero shuffle, fully inside whole-stage
-  *     codegen. This is the 100-TB path: centroids ride in the plan
-  *     (they are K small literals), so a 1000-executor scan needs no
-  *     broadcast exchange at all.
+  *  1. *Expression form* ([[withNearest]], [[nearestCid1]],
+  *     [[withNearestNDFull]]): one native
+  *     [[graft.functions.NearestCentroid]] per row scans the K centroids,
+  *     and [[graft.functions.CentroidDistance]] evaluates the same
+  *     distance once more on the winner for `d2`. One narrow map stage,
+  *     zero shuffle, inside whole-stage codegen. The centroids are a
+  *     reference object of the generated class, not literals in its
+  *     source, so a Lloyd loop compiles its assignment once and every
+  *     later iteration hits Spark's codegen cache; the plan size does
+  *     not grow with K or the dimension.
   *
   *  2. [[nearestRelational]] — *relational form*: crossJoin(broadcast(c))
   *     + per-point min + tie-break, the shape a SQL engine (and our DuckDB
   *     oracle) expresses directly.
   *
-  * Both break ties toward the lowest cid, matching mapper.py:43.
+  * Both break ties toward the lowest cid, matching mapper.py:43, and
+  * compute the distances with the oracle twins' IEEE arithmetic.
   */
 object Assign {
+  import graft.functions.{CentroidTable, NearestCentroid}
 
-  /** Minimum squared distance from (x,y) to the centroid set. */
-  def minDistSq2(x: Column, y: Column, cs: Seq[Centroid2D]): Column =
-    least(cs.map(c => distSq2(x, y, lit(c.cx), lit(c.cy))): _*)
-
-  /** Argmin cluster id: first centroid (ascending cid) whose distance
-    * equals the minimum — float equality is safe because both operands are
-    * the identical expression evaluation.
+  /** Nearest 1-D centroid id (sequential-kmeans.py:14-29, with the argmin
+    * CORRECT — the reference's line 25 stores an unsquared signed diff,
+    * documented divergence per SURVEY §3.2); -1 for a null point.
     */
-  def nearestCid2(x: Column, y: Column, cs: Seq[Centroid2D]): Column = {
-    val sorted = cs.sortBy(_.cid)
-    val mind = minDistSq2(x, y, sorted)
-    sorted.foldRight(lit(-1)) { (c, rest) =>
-      when(distSq2(x, y, lit(c.cx), lit(c.cy)) === mind, lit(c.cid)).otherwise(rest)
-    }
-  }
+  def nearestCid1(x: Column, cs: Seq[Centroid1D]): Column =
+    NearestCentroid.cid(Seq(x), CentroidTable(cs.map(c => c.cid -> Array(c.c))))
 
-  // NOTE on the foldRight above: it builds CASE WHEN d0=min THEN 0 WHEN
-  // d1=min THEN 1 ... — evaluated top-down, so the lowest cid wins ties.
-
-  /** 1-D variants (sequential-kmeans.py:14-29, with the argmin CORRECT —
-    * the reference's line 25 stores an unsquared signed diff, documented
-    * divergence per SURVEY §3.2).
-    */
-  def minDistSq1(x: Column, cs: Seq[Centroid1D]): Column =
-    least(cs.map(c => distSq1(x, lit(c.c))): _*)
-
-  def nearestCid1(x: Column, cs: Seq[Centroid1D]): Column = {
-    val sorted = cs.sortBy(_.cid)
-    val mind = minDistSq1(x, sorted)
-    sorted.foldRight(lit(-1)) { (c, rest) =>
-      when(distSq1(x, lit(c.c)) === mind, lit(c.cid)).otherwise(rest)
-    }
-  }
-
-  /** n-dim argmin over a literal centroid seq: K native `distSqFast`
-    * kernels (codegen'd tight loops, see graft.functions.ArrayKernels) +
-    * `least` + first-match CASE chain — one narrow stage, no shuffle.
-    * (History: an `aggregate` HOF fold was correct but interpreted; a
-    * naive `when(..).otherwise(acc)` fold duplicates the accumulator
-    * subtree per centroid and blows up exponentially.) The hot flagship
-    * path delegates to MLlib which adds the |a|²+|b|²-2ab form +
-    * triangle-inequality pruning.
-    * Returns struct(cid INT, d2 DOUBLE).
-    */
-  def nearestND(vec: Column, cs: Seq[CentroidND]): Column = {
-    val sorted = cs.sortBy(_.cid)
-    val dists = sorted.map(c =>
-      graft.functions.ArrayKernels.distSqFast(vec, array(c.vec.map(lit(_)): _*)))
-    val mind = least(dists: _*)
-    // first cid whose distance equals the min -> lowest cid wins ties
-    // (mapper.py:43 strict <); codegen CSE dedups the repeated subtrees
-    val cid = sorted.zip(dists).foldRight(lit(-1): Column) {
-      case ((c, d), rest) => when(d === mind, lit(c.cid)).otherwise(rest)
-    }
-    struct(cid.as("cid"), mind.as("d2"))
-  }
-
-  /** STAGED n-dim argmin: adds `outCol` (the nearest cid) to `df` via
-    * named per-centroid distance columns — the same IEEE operations,
-    * `least`, and first-match tie-break as [[nearestND]], so the result
-    * is bit-identical, but each `distSqFast(vec, literalArray)` subtree
-    * appears ONCE in the plan instead of ~K² times. At nlist=8 × 64-dim
-    * literals the inlined form costs ~1.3 s analysis/codegen per
-    * planning (build-playbook measurement); this form plans in ~0.2 s.
-    * CollapseProject keeps the stages split because every `_nd*` alias
-    * is referenced twice (in `least` and in its CASE arm).
-    */
+  /** Adds `outCol` (the nearest cid) to `df` for an n-dim point column. */
   def withNearestND(df: DataFrame, vecCol: Column, cs: Seq[CentroidND],
       outCol: String): DataFrame =
     withNearestNDFull(df, vecCol, cs, outCol, d2Col = None)
@@ -104,52 +51,25 @@ object Assign {
     * distance as `d2Col` (the SSE input for fit-style queries).
     */
   def withNearestNDFull(df: DataFrame, vecCol: Column, cs: Seq[CentroidND],
-      outCol: String, d2Col: Option[String]): DataFrame = {
-    val sorted = cs.sortBy(_.cid)
-    // temp names derived from outCol so two staged argmins can stack on
-    // one DataFrame (and a caller column named _nd0 can't collide)
-    def dName(cid: Int) = s"_${outCol}_d$cid"
-    val minName = d2Col.getOrElse(s"_${outCol}_min")
-    require(!df.columns.exists(c => c == minName || sorted.exists(s => dName(s.cid) == c)),
-      s"withNearestND temp column collision with input schema for outCol=$outCol")
-    val withDd = df.select(col("*") +: sorted.map(c =>
-      graft.functions.ArrayKernels.distSqFast(vecCol, array(c.vec.map(lit(_)): _*))
-        .as(dName(c.cid))): _*)
-    val withMin = withDd.withColumn(minName,
-      least(sorted.map(c => col(dName(c.cid))): _*))
-    val cid = sorted.foldRight(lit(-1)) { (c, rest) =>
-      when(col(dName(c.cid)) === col(minName), lit(c.cid)).otherwise(rest)
-    }
-    withMin.withColumn(outCol, cid)
-      .drop(sorted.map(c => dName(c.cid)) ++ (if (d2Col.isEmpty) Seq(minName) else Nil): _*)
-  }
+      outCol: String, d2Col: Option[String]): DataFrame =
+    withNearestAt(df, Seq(vecCol), CentroidTable(cs.map(c => c.cid -> c.vec)), outCol, d2Col)
 
-  /** Expression-form assignment: adds `cluster_id` and `d2` to a 2-D point
-    * DataFrame with columns (x, y). No shuffle.
-    *
-    * STAGED projections, not one inlined tree: each per-centroid distance
-    * is computed once as a named column, then `d2 = least(dd*)`, then the
-    * tie-break CASE reads only column refs. Inlining everything (the
-    * obvious `withColumn(nearestCid2(...))` form) duplicates every
-    * distance subtree ~9× — semantically identical, but analysis +
-    * codegen of the blown-up tree cost ~1.3 s PER QUERY PLANNING at K=8
-    * (measured; the staged form plans in ~0.2 s and runs the same speed
-    * warm). CollapseProject keeps the stages separate because each alias
-    * is referenced more than once.
+  /** Adds `cluster_id` and `d2` to a 2-D point DataFrame with columns
+    * (x, y). No shuffle.
     */
-  def withNearest(points: DataFrame, cs: Seq[Centroid2D]): DataFrame = {
-    val sorted = cs.sortBy(_.cid)
-    val ddNames = sorted.map(c => s"_dd${c.cid}")
-    val withDd = points.select(col("*") +:
-      sorted.map(c => distSq2(col("x"), col("y"), lit(c.cx), lit(c.cy))
-        .as(s"_dd${c.cid}")): _*)
-    val withD2 = withDd.withColumn("d2", least(ddNames.map(col): _*))
-    val cid = sorted.foldRight(lit(-1)) { (c, rest) =>
-      when(col(s"_dd${c.cid}") === col("d2"), lit(c.cid)).otherwise(rest)
-    }
-    // keep the historical column order: point cols, cluster_id, d2
-    withD2.withColumn("cluster_id", cid)
-      .select(points.columns.map(col) :+ col("cluster_id") :+ col("d2"): _*)
+  def withNearest(points: DataFrame, cs: Seq[Centroid2D]): DataFrame =
+    withNearestAt(points, Seq(col("x"), col("y")),
+      CentroidTable(cs.map(c => c.cid -> Array(c.cx, c.cy))), "cluster_id", Some("d2"))
+
+  /** `d2Col` reads the cid column, so the two stay separate projections
+    * (CollapseProject does not inline a non-trivial expression referenced
+    * twice) and each row runs the K-way argmin once.
+    */
+  private def withNearestAt(df: DataFrame, point: Seq[Column], table: CentroidTable,
+      outCol: String, d2Col: Option[String]): DataFrame = {
+    val withCid = df.withColumn(outCol, NearestCentroid.cid(point, table))
+    d2Col.fold(withCid)(d =>
+      withCid.withColumn(d, NearestCentroid.distance(point, col(outCol), table)))
   }
 
   /** Relational-form assignment: broadcast crossJoin + window-min +

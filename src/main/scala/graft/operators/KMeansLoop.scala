@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The iterative Lloyd's k-means driver loop (SURVEY §3.1 entry point 1).
   *
@@ -10,17 +11,21 @@ import org.apache.spark.sql.functions._
   * convergence `|SSE(old) − SSE(new)| < 0.5` (master.py:365, delta at
   * master.py:22) } up to an iteration cap.
   *
-  * Spark realization: one job per iteration — scan + assignment expression
-  * + partial agg → exchange(K rows/partition) → final agg → collect K
-  * rows → rebuild the literal-centroid expression → repeat. The SSE
-  * piggybacks on the SAME aggregation pass (`sum(d2)` alongside the
-  * means), where the reference re-scans the full input TWICE per
-  * iteration for the objective (master.py:315-332, 365) — at 100 TB that
-  * is 200 TB/iteration of avoided IO.
+  * Spark realization: per iteration, scan + assignment expression +
+  * partial agg → exchange(K rows/partition) → final agg → collect K rows
+  * → next centroids. Under AQE that is two jobs per iteration (the map
+  * stage, then the result stage), plus one job at the start of the fit
+  * on the first use of the cached points: 21 jobs for 10 iterations.
+  * The SSE piggybacks on the SAME aggregation pass (`sum(d2)`
+  * alongside the means), where the reference re-scans the full input
+  * TWICE per iteration for the objective (master.py:315-332, 365) — at
+  * 100 TB that is 200 TB/iteration of avoided IO.
   *
   * Scale notes: per-iteration shuffle traffic is K×partitions rows
-  * (map-side combine), the driver holds only K centroids, and the
-  * assignment is a literal expression (no broadcast exchange needed).
+  * (map-side combine), and the model is only K centroids. They reach
+  * the executors inside the plan's [[graft.functions.NearestCentroid]]
+  * (no broadcast exchange), as a reference object of the generated
+  * code, so iterations after the first reuse the compiled class.
   */
 object KMeansLoop {
 
@@ -57,9 +62,13 @@ object KMeansLoop {
       maxIter: Int,
       delta: Double = 0.5,
       policy: Recenter.RepairPolicy = Recenter.RepairPolicy.KeepOld): FitResult = {
-    // cache: the SAME point table is scanned every iteration
-    points.cache()
+    // cache: the SAME point table is scanned every iteration; a caller's
+    // own cache is left as it was
+    val owned = points.storageLevel == StorageLevel.NONE
+    if (owned) points.cache()
     try {
+      // empty-cluster redraws sample the bbox of the (unchanging) points
+      lazy val (xlo, xhi, ylo, yhi) = Recenter.bbox(points)
       var cs = init
       var prevSse = Double.NaN
       var history = Vector.empty[Double]
@@ -73,7 +82,6 @@ object KMeansLoop {
               .map { case (_, x, y) => Centroid2D(c.cid, x, y) }.getOrElse(c))
           case Recenter.RepairPolicy.Rerandomize(seed) =>
             val rnd = new java.util.Random(seed + it)
-            lazy val (xlo, xhi, ylo, yhi) = Recenter.bbox(points)
             cs.map(c => byCid.get(c.cid)
               .map { case (_, x, y) => Centroid2D(c.cid, x, y) }
               .getOrElse(Centroid2D(c.cid,
@@ -88,6 +96,6 @@ object KMeansLoop {
         it += 1
       }
       FitResult(cs, prevSse, it, converged, history)
-    } finally points.unpersist()
+    } finally if (owned) points.unpersist()
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, Encoder, Encoders}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.functions.VecFunctions._
+import org.apache.spark.storage.StorageLevel
 
 /** n-dimensional k-means over `ArrayType(Double)` points (the flagship
   * embeddings table is 64-dim; the sequential oracle is 1-D — the kernel
@@ -80,30 +80,6 @@ object KMeansND {
       Encoders.tuple(ExprEnc.doubleArray, Encoders.scalaLong, Encoders.scalaDouble)
   }
 
-  /** Assignment: adds cluster_id + d2 for an n-dim point DF with a
-    * double-array column `vec`. Literal centroids → no shuffle.
-    *
-    * Staged like Assign.withNearest (2-D): one named column per centroid
-    * distance, then least, then a CASE of column refs. The inlined
-    * struct form duplicated every distSqFast(vec, [64 literals]) subtree
-    * ~2× per centroid, and at K=10×dim=64 the tree is re-ANALYZED every
-    * fit iteration — staging cuts planning from seconds to noise.
-    */
-  def withNearest(points: DataFrame, cs: Seq[CentroidND]): DataFrame = {
-    val sorted = cs.sortBy(_.cid)
-    val ddNames = sorted.map(c => s"_dd${c.cid}")
-    val withDd = points.select(col("*") +: sorted.map(c =>
-      graft.functions.ArrayKernels.distSqFast(col("vec"),
-        array(c.vec.map(lit(_)): _*)).as(s"_dd${c.cid}")): _*)
-    val withD2 = withDd.withColumn("d2", least(ddNames.map(col): _*))
-    val cid = sorted.foldRight(lit(-1)) { (c, rest) =>
-      when(col(s"_dd${c.cid}") === col("d2"), lit(c.cid)).otherwise(rest)
-    }
-    // keep the historical column order: point cols, cluster_id, d2
-    withD2.withColumn("cluster_id", cid)
-      .select(points.columns.map(col) :+ col("cluster_id") :+ col("d2"): _*)
-  }
-
   final case class FitResult(
       centroids: Seq[CentroidND],
       sse: Double,
@@ -121,16 +97,17 @@ object KMeansND {
       delta: Double = 0.5): FitResult = {
     import spark.implicits._
     val dim = init.head.vec.length
-    points.cache()
+    val owned = points.storageLevel == StorageLevel.NONE
+    if (owned) points.cache()
     try {
       var cs = init
       var prevSse = Double.NaN
       var it = 0
       var converged = false
       while (it < maxIter && !converged) {
-        val assigned = withNearest(points, cs)
-        // ONE job per iteration: means + counts + SSE in the same typed
-        // aggregation (partial agg -> K rows per partition shuffle)
+        val assigned = Assign.withNearestNDFull(points, col("vec"), cs, "cluster_id", Some("d2"))
+        // ONE aggregation pass per iteration: means + counts + SSE in the
+        // same typed aggregation (partial agg -> K rows per partition shuffle)
         val ds: Dataset[(Int, Array[Double], Double)] =
           assigned.select(col("cluster_id"), col("vec"), col("d2"))
             .as[(Int, Array[Double], Double)]
@@ -144,6 +121,6 @@ object KMeansND {
         it += 1
       }
       FitResult(cs, prevSse, it, converged)
-    } finally points.unpersist()
+    } finally if (owned) points.unpersist()
   }
 }

@@ -66,8 +66,8 @@ object Multimodal {
     *   video: d1=w, d2=h, n_units=frames, s0 = total rgb sum
     * All-integer digests — exact cross-engine, no float rounding. Each
     * branch stages the decoded struct as a named column so the decoder
-    * runs once per row (CollapseProject keeps the stage split; see the
-    * Assign.withNearest planning note).
+    * runs once per row (CollapseProject keeps the stage split: it does not
+    * inline a non-trivial expression referenced more than once).
     */
   def features(media: DataFrame, eager: Boolean = true): DataFrame = {
     // cache: the per-kind branches each filter the SAME synthesized

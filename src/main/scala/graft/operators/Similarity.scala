@@ -145,7 +145,7 @@ object Similarity {
 
   /** IVF (inverted-file) ANN: coarse-quantize the corpus by
     * nearest-coarse-centroid (the SAME kernel as k-means assignment —
-    * Assign.nearestND), then search only the query's own cell
+    * Assign.withNearestND), then search only the query's own cell
     * (nprobe=1). The scale shape: cells partition the corpus, each query
     * touches |corpus|/nlist candidates.
     */
@@ -370,8 +370,7 @@ object Similarity {
 
   /** STAGED per-subspace PQ encoding: adds `outPrefix0..outPrefix{M-1}`
     * code columns (argmin codebook entry per subspace slice of `vCol`).
-    * Same staged-named-columns discipline as [[Assign.withNearestND]]:
-    * each subspace distance is computed once as a named column, so the
+    * Each subspace distance is computed once as a named column, so the
     * plan carries M×K distance subtrees instead of ~2·M×K — identical
     * IEEE ops, `least`, and lowest-cid tie-break as the inlined form.
     */
@@ -780,8 +779,8 @@ object Similarity {
     * incremental ANN: each vector's nearest coarse cell via ONE
     * broadcast join against the (cid, centroid) model table + ONE
     * map-side-combined `min(struct(d, cid))` argmin (strict-<,
-    * lowest-cid ties — bit-identical to the literal
-    * Assign.withNearestND chain, the `sim_ivf_pq_bt` discipline).
+    * lowest-cid ties — bit-identical to Assign.withNearestND, the
+    * `sim_ivf_pq_bt` discipline).
     * Returns (cell, vec_id, v, nrm) — the postings-row shape
     * [[ivfServe]] consumes and StagedLayouts persists bucketed by
     * cell. Plan size is independent of nlist; the assignment is a

@@ -27,7 +27,7 @@ object PqResidualTrain {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
       .select(col("vec_id"), toDoubleArray(col("embedding")).as("vec"))
     // residual = vec − centroid of the assigned cell
-    val celled = KMeansND.withNearest(emb.select(col("vec_id"), col("vec")), cells)
+    val celled = Assign.withNearestND(emb.select(col("vec_id"), col("vec")), col("vec"), cells, "cluster_id")
     val centArr = cells.foldRight(lit(null)
         .cast("array<double>"): org.apache.spark.sql.Column) { (c, rest) =>
       when(col("cluster_id") === c.cid, array(c.vec.map(lit(_)): _*)).otherwise(rest)

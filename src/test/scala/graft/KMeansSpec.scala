@@ -46,6 +46,189 @@ class KMeansSpec extends SparkSpec {
     assert(cid1 == 0)
   }
 
+  // ---- NearestCentroid: the one assignment kernel ----
+
+  /** Runs `body` with whole-stage codegen (a compile error fails rather
+    * than falling back to interpreted), then fully interpreted.
+    */
+  private def codegenAndInterpreted(body: String => Unit): Unit = {
+    def withConf(kvs: (String, String)*)(run: => Unit): Unit = {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try run finally kvs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    withConf("spark.sql.codegen.fallback" -> "false")(body("codegen"))
+    withConf("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body("interpreted"))
+  }
+
+  /** `least()` + first-match CASE semantics in plain Scala: ascending cid,
+    * the first distance no other orders before (NaN largest).
+    */
+  private def argmin(ds: Seq[(Int, Double)]): (Int, Double) = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    ds.sortBy(_._1).reduceLeft((best, d) => if (compareDoubles(d._2, best._2) < 0) d else best)
+  }
+
+  private def sameBits(a: Double, b: Double): Boolean =
+    java.lang.Double.doubleToLongBits(a) == java.lang.Double.doubleToLongBits(b)
+
+  /** Rows through an RDD, not a LocalRelation the optimizer would evaluate
+    * itself, so the codegen run really runs the generated projection.
+    */
+  private def pointsDf(rows: Seq[org.apache.spark.sql.Row],
+      schema: org.apache.spark.sql.types.StructType) =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+
+  private val big = 1e200 // its square overflows to +Inf
+
+  test("NearestCentroid 2-D: cid and d2 bit-equal the least() argmin and nearestRelational") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val sets = Seq(
+      Seq(Centroid2D(0, Double.NaN, 5.0), // NaN distance first: any number beats it
+        Centroid2D(1, 0.0, 0.0), Centroid2D(2, 10.0, 0.0), Centroid2D(3, 20.0, 0.0),
+        Centroid2D(4, 10.0, 0.0), // duplicate of cid 2
+        Centroid2D(5, -big, big)),
+      Seq(Centroid2D(7, 3.0, -4.0))) // K = 1
+    val xy = Seq((15.0, 0.0), (5.0, 0.0), (10.0, 0.0), (-3.5, 2.25), (Double.NaN, 1.0),
+      (1.0, Double.NaN), (big, 0.0), (-big, big), (Double.PositiveInfinity, 0.0),
+      (-0.0, 0.0), (1e-300, -1e-300))
+    val rows = xy.zipWithIndex.map { case ((x, y), i) => Row(i.toLong, x, y) } :+
+      Row(xy.length.toLong, null, 1.0)
+    val schema = StructType(Seq(StructField("id", LongType), StructField("x", DoubleType),
+      StructField("y", DoubleType)))
+    codegenAndInterpreted { mode =>
+      sets.foreach { cs =>
+        val got = Assign.withNearest(pointsDf(rows, schema), cs).collect()
+          .map(r => r.getLong(0) -> r).toMap
+        xy.zipWithIndex.foreach { case ((x, y), i) =>
+          val (cid, d2) = argmin(cs.map(c =>
+            c.cid -> ((x - c.cx) * (x - c.cx) + (y - c.cy) * (y - c.cy))))
+          val r = got(i.toLong)
+          assert(r.getInt(3) == cid && sameBits(r.getDouble(4), d2),
+            s"$mode K=${cs.size} point ($x, $y): got (${r.get(3)}, ${r.get(4)}), want ($cid, $d2)")
+        }
+        val nullRow = got(xy.length.toLong)
+        assert(nullRow.getInt(3) == -1 && nullRow.isNullAt(4), s"$mode null point: $nullRow")
+        val rel = Assign.nearestRelational(pointsDf(rows, schema).where(col("x").isNotNull),
+            Centroids.toDF(spark, cs), Seq("id")).collect()
+          .map(r => r.getLong(0) -> (r.getInt(3), r.getDouble(4))).toMap
+        assert(rel.keySet == xy.indices.map(_.toLong).toSet)
+        rel.foreach { case (id, (cid, d2)) =>
+          assert(got(id).getInt(3) == cid && sameBits(got(id).getDouble(4), d2),
+            s"$mode K=${cs.size} id $id: relational ($cid, $d2) vs ${got(id)}")
+        }
+      }
+    }
+  }
+
+  test("NearestCentroid 1-D: cid and d2 bit-equal the least() argmin") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.functions.{CentroidTable, NearestCentroid}
+    val sets = Seq(
+      Seq(Centroid1D(0, Double.NaN), Centroid1D(1, 5.0), Centroid1D(2, 15.0), Centroid1D(3, 5.0),
+        Centroid1D(4, -big)),
+      Seq(Centroid1D(2, 1.0)))
+    val xs = Seq(10.0, 5.0, 0.0, 100.0, Double.NaN, big, -big, Double.NegativeInfinity, -0.0)
+    val rows = xs.map(Row(_)) :+ Row(null)
+    val schema = StructType(Seq(StructField("x", DoubleType)))
+    codegenAndInterpreted { mode =>
+      sets.foreach { cs =>
+        val table = CentroidTable(cs.map(c => c.cid -> Array(c.c)))
+        val got = pointsDf(rows, schema)
+          .withColumn("cid", Assign.nearestCid1(col("x"), cs))
+          .withColumn("d2", NearestCentroid.distance(Seq(col("x")), col("cid"), table))
+          .collect()
+        assert(got.length == rows.length)
+        got.foreach { r =>
+          if (r.isNullAt(0)) assert(r.getInt(1) == -1 && r.isNullAt(2), s"$mode null point: $r")
+          else {
+            val x = r.getDouble(0)
+            val (cid, d2) = argmin(cs.map(c => c.cid -> (x - c.c) * (x - c.c)))
+            assert(r.getInt(1) == cid && sameBits(r.getDouble(2), d2),
+              s"$mode K=${cs.size} point $x: got $r, want ($cid, $d2)")
+          }
+        }
+      }
+    }
+  }
+
+  test("NearestCentroid 64-d: cid and d2 bit-equal the least() argmin") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dim = 64
+    val rnd = new scala.util.Random(11)
+    def vec() = Array.fill(dim)(rnd.nextGaussian())
+    val c0 = vec()
+    val sets = Seq(
+      Seq(CentroidND(0, vec().updated(5, Double.NaN)),
+        CentroidND(1, c0), CentroidND(2, c0.map(-_)), // mirror images: ties at 0
+        CentroidND(3, vec()), CentroidND(4, c0.clone()), // duplicate of cid 1
+        CentroidND(5, Array.fill(dim)(big))),
+      Seq(CentroidND(9, vec()))) // K = 1
+    val points = Seq(Array.fill(dim)(0.0), c0.clone(), vec(), vec(),
+      vec().updated(17, Double.NaN), Array.fill(dim)(-big), vec().updated(0, big),
+      Array.fill(dim)(Double.PositiveInfinity))
+    val rows = points.map(p => Row(p.toSeq)) :+ Row(null)
+    val schema = StructType(Seq(StructField("vec", ArrayType(DoubleType, containsNull = false))))
+    codegenAndInterpreted { mode =>
+      sets.foreach { cs =>
+        val got = Assign.withNearestNDFull(pointsDf(rows, schema), col("vec"), cs,
+          "cluster_id", Some("d2")).collect()
+        assert(got.length == rows.length)
+        got.foreach { r =>
+          if (r.isNullAt(0)) assert(r.getInt(1) == -1 && r.isNullAt(2), s"$mode null point: $r")
+          else {
+            val v = r.getSeq[Double](0)
+            val (cid, d2) = argmin(cs.map(c => c.cid ->
+              v.zip(c.vec).foldLeft(0.0) { case (s, (a, b)) => s + (a - b) * (a - b) }))
+            assert(r.getInt(1) == cid && sameBits(r.getDouble(2), d2),
+              s"$mode K=${cs.size} point ${v.take(3)}…: got (${r.get(1)}, ${r.get(2)}), want ($cid, $d2)")
+          }
+        }
+      }
+    }
+  }
+
+  test("Lloyd iterations after the first compile no code (CodegenMetrics)") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.functions.VecFunctions.toDoubleArray
+    /** Compiles during a `maxIter = 5` fit that follows a `maxIter = 1`
+      * fit from the same init: iteration 1 repeats the warm-up's plan, so
+      * any compile comes from iterations 2..5 and their new centroids.
+      */
+    def compilesAfterIteration1(fit: Int => Unit): Long = {
+      fit(1)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      fit(5)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val pts2 = Tables.points2d(spark, sf)
+    assert(compilesAfterIteration1(n =>
+      KMeansLoop.fit(spark, pts2, Centroids.k2d, maxIter = n, delta = 0.0)) == 0)
+    val ptsN = Tables.embeddings(spark, sf).select(toDoubleArray(col("embedding")).as("vec"))
+    val initN = Centroids.randomInitND(4, 64, seed = 42L, -0.5, 0.5)
+    assert(compilesAfterIteration1(n =>
+      KMeansND.fit(spark, ptsN, initN, maxIter = n, delta = 0.0)) == 0)
+  }
+
+  test("fit leaves a caller-cached DataFrame cached") {
+    import org.apache.spark.storage.StorageLevel
+    val pts2 = Tables.points2d(spark, sf).cache()
+    val ptsN = pts2.select(array(col("x"), col("y")).as("vec")).cache()
+    try {
+      KMeansLoop.fit(spark, pts2, Centroids.k2d, maxIter = 2)
+      KMeansND.fit(spark, ptsN, Centroids.k2d.map(c => CentroidND(c.cid, Array(c.cx, c.cy))),
+        maxIter = 2)
+      assert(pts2.storageLevel != StorageLevel.NONE, "KMeansLoop.fit dropped the caller's cache")
+      assert(ptsN.storageLevel != StorageLevel.NONE, "KMeansND.fit dropped the caller's cache")
+    } finally {
+      ptsN.unpersist()
+      pts2.unpersist()
+    }
+  }
+
   test("expression form == relational form on fixture data (J1 cross-check)") {
     val pts = Tables.points2d(spark, sf)
     val exprForm = Assign.withNearest(pts, Centroids.k2d)

@@ -58,6 +58,9 @@ class PlanSpec extends SparkSpec {
     // executedPlan.toString marks codegen'd operators with a `*(id)` prefix
     val p = plan(Assign.withNearest(Tables.points2d(spark, sf), Centroids.k2d))
     assert(p.contains("*(1) Project"), s"no codegen span:\n$p")
+    // one native argmin; a literal least() + CASE chain must not come back
+    assert("nearest_centroid\\(".r.findAllIn(p).length == 1, s"expected one nearest_centroid:\n$p")
+    assert(!p.contains("least(") && !p.contains("CASE WHEN"), s"literal argmin chain in:\n$p")
   }
 
   test("q_tpch_q3: timestamp brackets reach the scans, dims broadcast") {

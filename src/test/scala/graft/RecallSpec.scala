@@ -165,8 +165,8 @@ class RecallSpec extends SparkSpec {
     }
 
     val raw = distortion(emb.select(col("v")), TrainedPqCodebooks.books)
-    val celled = KMeansND.withNearest(emb.select(col("vec_id"), col("v").as("vec"))
-        .withColumnRenamed("vec", "vec"), cells)
+    val celled = Assign.withNearestND(emb.select(col("vec_id"), col("v").as("vec")),
+        col("vec"), cells, "cluster_id")
     val resid = celled.withColumn("cent",
         cells.foldRight(lit(null).cast("array<double>"): org.apache.spark.sql.Column) {
           (c, rest) => when(col("cluster_id") === c.cid,
