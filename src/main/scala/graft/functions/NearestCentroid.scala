@@ -25,6 +25,9 @@ final class CentroidTable private (cids: Array[Int], coords: Array[Double], val 
 
   def k: Int = cids.length
 
+  /** Id of the centroid at index `i`. */
+  def cid(i: Int): Int = cids(i)
+
   /** Index of centroid id `cid`, or -1 when the set has no such id. Ids
     * 0..K-1, the usual model, are their own index: no binary search,
     * whose data-dependent branches mispredict on clustered points.
@@ -62,7 +65,12 @@ final class CentroidTable private (cids: Array[Int], coords: Array[Double], val 
   private def before(d: Double, best: Double): Boolean =
     d < best || (best != best && d == d)
 
-  def nearest(x: Double): Int = {
+  def nearest(x: Double): Int = cids(nearestIndex(x))
+  def nearest(x: Double, y: Double): Int = cids(nearestIndex(x, y))
+  def nearest(v: ArrayData): Int = cids(nearestIndex(v))
+
+  /** Index (not id) of the nearest centroid; see [[cid]]. */
+  def nearestIndex(x: Double): Int = {
     var best = 0; var bd = distance(0, x)
     var i = 1
     while (i < k) {
@@ -70,10 +78,10 @@ final class CentroidTable private (cids: Array[Int], coords: Array[Double], val 
       if (before(d, bd)) { best = i; bd = d }
       i += 1
     }
-    cids(best)
+    best
   }
 
-  def nearest(x: Double, y: Double): Int = {
+  def nearestIndex(x: Double, y: Double): Int = {
     var best = 0; var bd = distance(0, x, y)
     var i = 1
     while (i < k) {
@@ -81,10 +89,10 @@ final class CentroidTable private (cids: Array[Int], coords: Array[Double], val 
       if (before(d, bd)) { best = i; bd = d }
       i += 1
     }
-    cids(best)
+    best
   }
 
-  def nearest(v: ArrayData): Int = {
+  def nearestIndex(v: ArrayData): Int = {
     var best = 0; var bd = distance(0, v)
     var i = 1
     while (i < k) {
@@ -92,7 +100,7 @@ final class CentroidTable private (cids: Array[Int], coords: Array[Double], val 
       if (before(d, bd)) { best = i; bd = d }
       i += 1
     }
-    cids(best)
+    best
   }
 
   private[functions] def nearestTo(point: Seq[Any]): Int = point match {

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 /** The iterative Lloyd's k-means driver loop (SURVEY §3.1 entry point 1).
@@ -11,23 +10,25 @@ import org.apache.spark.storage.StorageLevel
   * convergence `|SSE(old) − SSE(new)| < 0.5` (master.py:365, delta at
   * master.py:22) } up to an iteration cap.
   *
-  * Spark realization: per iteration, scan + assignment expression +
-  * partial agg → exchange(K rows/partition) → final agg → collect K rows
-  * → next centroids. Under AQE that is two jobs per iteration (the map
-  * stage, then the result stage), plus one job at the start of the fit
-  * on the first use of the cached points: 21 jobs for 10 iterations.
-  * The SSE piggybacks on the SAME aggregation pass (`sum(d2)`
-  * alongside the means), where the reference re-scans the full input
-  * TWICE per iteration for the objective (master.py:315-332, 365) — at
-  * 100 TB that is 200 TB/iteration of avoided IO.
+  * Spark realization: one Spark job per iteration, one stage, no
+  * shuffle. [[LloydFold]] plans the cached points' `x`, `y` once per fit;
+  * each iteration then folds every partition into per-centroid count,
+  * coordinate sums and SSE (K-sized primitive arrays — the map with its
+  * combine), collects the P partials and merges them on the driver in
+  * partition order (the reduce and the master's merge), then divides
+  * the sums and applies [[Recenter.repair]]. No iteration analyzes,
+  * optimizes, plans or compiles anything. The SSE comes from the SAME
+  * pass, where the reference re-scans the full input TWICE per
+  * iteration for the objective (master.py:315-332, 365) — at 100 TB
+  * that is 200 TB/iteration of avoided IO.
   *
-  * Scale notes: per-iteration shuffle traffic is K×partitions rows
-  * (map-side combine), and the model is only K centroids. They reach
-  * the executors inside the plan's [[graft.functions.NearestCentroid]]
-  * (no broadcast exchange), as a reference object of the generated
-  * code, so iterations after the first reuse the compiled class.
+  * Scale notes: per iteration the executors ship back K×P partial sums
+  * (no shuffle), and the model is only K centroids; they reach the
+  * executors inside the task closure, as the
+  * [[graft.functions.CentroidTable]] the assignment expression uses.
   */
 object KMeansLoop {
+  import graft.functions.CentroidTable
 
   final case class FitResult(
       centroids: Seq[Centroid2D],
@@ -36,20 +37,20 @@ object KMeansLoop {
       converged: Boolean,
       sseHistory: Seq[Double])
 
-  /** One assign+recenter+SSE pass. Returns (per-cid (cnt, mean), SSE). */
-  def step(points: DataFrame, cs: Seq[Centroid2D]): (Map[Int, (Long, Double, Double)], Double) = {
-    val assigned = Assign.withNearest(points, cs)
-    // means + SSE in ONE aggregation pass: sum(d2) is distributive, so it
-    // rides the same partial/final hash-agg as the means.
-    val rows = assigned.groupBy(col("cluster_id")).agg(
-      count(lit(1)).as("cnt"),
-      avg(col("x")).as("mx"),
-      avg(col("y")).as("my"),
-      sum(col("d2")).as("sse")).collect()
-    val byCid = rows.map(r =>
-      r.getInt(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    val sse = rows.map(_.getDouble(4)).sum
-    (byCid, sse)
+  /** One assign+recenter+SSE pass: one fold job over `points`' `x`, `y`.
+    * Returns (per-cid (count, mean x, mean y) of each non-empty cluster,
+    * SSE).
+    */
+  def step(points: DataFrame, cs: Seq[Centroid2D]): (Map[Int, (Long, Double, Double)], Double) =
+    stepOn(LloydFold.xy(points), cs)
+
+  private def stepOn(fold: LloydFold, cs: Seq[Centroid2D])
+      : (Map[Int, (Long, Double, Double)], Double) = {
+    val t = CentroidTable(cs.map(c => c.cid -> Array(c.cx, c.cy)))
+    val s = fold.pass(t)
+    val byCid = (0 until t.k).filter(s.count(_) > 0)
+      .map(i => t.cid(i) -> (s.count(i), s.mean(i, 0), s.mean(i, 1))).toMap
+    (byCid, s.sse.sum)
   }
 
   /** Full fit. `delta` mirrors master.py:22 (0.5); `maxIter` is the
@@ -67,27 +68,17 @@ object KMeansLoop {
     val owned = points.storageLevel == StorageLevel.NONE
     if (owned) points.cache()
     try {
+      val fold = LloydFold.xy(points)
       // empty-cluster redraws sample the bbox of the (unchanging) points
-      lazy val (xlo, xhi, ylo, yhi) = Recenter.bbox(points)
+      lazy val box = Recenter.bbox(points)
       var cs = init
       var prevSse = Double.NaN
       var history = Vector.empty[Double]
       var it = 0
       var converged = false
       while (it < maxIter && !converged) {
-        val (byCid, sse) = step(points, cs)
-        cs = policy match {
-          case Recenter.RepairPolicy.KeepOld =>
-            cs.map(c => byCid.get(c.cid)
-              .map { case (_, x, y) => Centroid2D(c.cid, x, y) }.getOrElse(c))
-          case Recenter.RepairPolicy.Rerandomize(seed) =>
-            val rnd = new java.util.Random(seed + it)
-            cs.map(c => byCid.get(c.cid)
-              .map { case (_, x, y) => Centroid2D(c.cid, x, y) }
-              .getOrElse(Centroid2D(c.cid,
-                xlo + rnd.nextDouble() * (xhi - xlo),
-                ylo + rnd.nextDouble() * (yhi - ylo))))
-        }
+        val (byCid, sse) = stepOn(fold, cs)
+        cs = Recenter.repair(cs, byCid, policy, seedOffset = it)(box)
         history :+= sse
         // convergence on |ΔSSE| < delta (master.py:365); the first
         // iteration has no previous SSE

@@ -55,21 +55,30 @@ object Recenter {
       .toMap
     // K is tiny: the merge itself is driver-side, like the reference's
     // master (master.py:242-244) and MLlib.
-    policy match {
-      case RepairPolicy.KeepOld =>
-        old.map(c => agg.get(c.cid)
-          .map { case (_, x, y) => Centroid2D(c.cid, x, y) }
-          .getOrElse(c))
+    repair(old, agg, policy)(bbox(assigned))
+  }
+
+  /** The repaired model: each cid of `old` moves to its mean in `means`
+    * ((count, mean x, mean y) of each non-empty cluster); a cid `means`
+    * lacks is empty and `policy` repairs it. Rerandomize draws x then y
+    * for each empty cid in `old`'s order, from one `java.util.Random`
+    * seeded `seed + seedOffset`, inside `box` (xlo, xhi, ylo, yhi), which
+    * is evaluated only when a cluster is empty.
+    */
+  def repair(
+      old: Seq[Centroid2D],
+      means: Map[Int, (Long, Double, Double)],
+      policy: RepairPolicy,
+      seedOffset: Long = 0L)(box: => (Double, Double, Double, Double)): Seq[Centroid2D] = {
+    val empty: Centroid2D => Centroid2D = policy match {
+      case RepairPolicy.KeepOld => identity
       case RepairPolicy.Rerandomize(seed) =>
-        val rnd = new java.util.Random(seed)
-        val (xlo, xhi, ylo, yhi) = bbox(assigned)
-        old.map(c => agg.get(c.cid)
-          .map { case (_, x, y) => Centroid2D(c.cid, x, y) }
-          .getOrElse {
-            Centroid2D(c.cid, xlo + rnd.nextDouble() * (xhi - xlo),
-              ylo + rnd.nextDouble() * (yhi - ylo))
-          })
+        val rnd = new java.util.Random(seed + seedOffset)
+        lazy val (xlo, xhi, ylo, yhi) = box
+        c => Centroid2D(c.cid,
+          xlo + rnd.nextDouble() * (xhi - xlo), ylo + rnd.nextDouble() * (yhi - ylo))
     }
+    old.map(c => means.get(c.cid).fold(empty(c)) { case (_, x, y) => Centroid2D(c.cid, x, y) })
   }
 
   /** A4 — global bounding box in one pass (getInputRange,

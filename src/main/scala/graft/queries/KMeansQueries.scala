@@ -527,7 +527,7 @@ object KMeansQueries {
         .orderBy("cluster_id")
     }),
 
-    // n-dim typed-Aggregator fit on 64-dim embeddings (SURVEY §2.9)
+    // n-dim fit on 64-dim embeddings (one fold job per iteration)
     "kmeans_fit_nd" -> ((s, dir) => {
       import s.implicits._
       import graft.functions.VecFunctions.toDoubleArray

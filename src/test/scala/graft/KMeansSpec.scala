@@ -229,6 +229,168 @@ class KMeansSpec extends SparkSpec {
     }
   }
 
+  // ---- LloydFold: one job per Lloyd iteration ----
+
+  private def relClose(a: Double, b: Double): Boolean =
+    a == b || math.abs(a - b) <= 1e-9 * math.max(math.abs(a), math.abs(b))
+
+  /** `df`'s rows in 7 partitions; partitions 2 and 5 are empty. */
+  private def sevenPartitions(df: org.apache.spark.sql.DataFrame) = {
+    val rows = spark.sparkContext.parallelize(df.collect().toSeq, 7)
+      .mapPartitionsWithIndex((i, it) => if (i == 2 || i == 5) Iterator.empty else it)
+    val out = spark.createDataFrame(rows, df.schema)
+    assert(out.rdd.glom().collect().map(_.length).count(_ == 0) == 2)
+    out
+  }
+
+  test("Lloyd fold == relational form in 2-D: 7 partitions, empty ones, sparse cids, empty cluster") {
+    import graft.functions.CentroidTable
+    val pts = sevenPartitions(Tables.points2d(spark, sf).select("x", "y"))
+    val sparse = Seq(Centroid2D(7, 60000.0, 30.0), Centroid2D(3, 20000.0, 10.0),
+      Centroid2D(11, 1.0e9, 1.0e9), // no point is nearest: an empty cluster
+      Centroid2D(5, 90000.0, 45.0))
+    Seq(Centroids.k2d, sparse, Centroids.k2dWithEmpty).foreach { cs =>
+      val assigned = Assign.withNearest(pts, cs)
+      val means = Recenter.means(assigned).collect()
+        .map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
+      val sse = assigned.groupBy("cluster_id").agg(sum("d2")).collect()
+        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+      val table = CentroidTable(cs.map(c => c.cid -> Array(c.cx, c.cy)))
+      val sums = LloydFold.xy(pts).pass(table)
+      (0 until table.k).foreach { i =>
+        val cid = table.cid(i)
+        val (n, mx, my) = means.getOrElse(cid, (0L, Double.NaN, Double.NaN))
+        assert(sums.count(i) == n, s"cid $cid count")
+        if (n > 0) assert(relClose(sums.mean(i, 0), mx) && relClose(sums.mean(i, 1), my) &&
+          relClose(sums.sse(i), sse(cid)), s"cid $cid: fold vs relational")
+        else assert(sums.sse(i) == 0.0)
+      }
+      val (byCid, total) = KMeansLoop.step(pts, cs)
+      assert(byCid.keySet == means.keySet)
+      byCid.foreach { case (cid, (n, x, y)) =>
+        assert(n == means(cid)._1 && relClose(x, means(cid)._2) && relClose(y, means(cid)._3))
+      }
+      assert(relClose(total, sse.values.sum))
+      // one iteration of the fit == the relational recenter, under both policies
+      Seq(RepairPolicy.KeepOld, RepairPolicy.Rerandomize(5L)).foreach { policy =>
+        val fit = KMeansLoop.fit(spark, pts, cs, maxIter = 1, delta = 0.0, policy = policy)
+        val rel = Recenter.recenter(spark, assigned, cs, policy)
+        assert(fit.centroids.map(_.cid) == cs.map(_.cid))
+        fit.centroids.zip(rel).foreach { case (a, b) =>
+          if (means.contains(a.cid)) assert(relClose(a.cx, b.cx) && relClose(a.cy, b.cy), s"$policy $a $b")
+          else assert(a == b, s"$policy repaired cid ${a.cid}: fit $a, recenter $b")
+        }
+      }
+    }
+  }
+
+  test("Lloyd fold == relational form in 64-d: 7 partitions, empty ones, sparse cids, empty cluster") {
+    import graft.functions.CentroidTable
+    import graft.functions.VecFunctions.toDoubleArray
+    val dim = 64
+    val pts = sevenPartitions(
+      Tables.embeddings(spark, sf).select(toDoubleArray(col("embedding")).as("vec")))
+    val init = Centroids.randomInitND(3, dim, seed = 42L, -0.5, 0.5)
+    val sparse = Seq(CentroidND(11, init(0).vec), CentroidND(3, init(1).vec),
+      CentroidND(15, Array.fill(dim)(1.0e6)), // an empty cluster
+      CentroidND(7, init(2).vec))
+    Seq(Centroids.randomInitND(4, dim, seed = 42L, -0.5, 0.5), sparse).foreach { cs =>
+      val stats = Assign.withNearestNDFull(pts, col("vec"), cs, "cluster_id", Some("d2"))
+        .groupBy("cluster_id")
+        .agg(count(lit(1)), sum("d2") +: (0 until dim).map(j => avg(col("vec")(j))): _*)
+        .collect().map(r => r.getInt(0) -> r).toMap
+      val table = CentroidTable(cs.map(c => c.cid -> c.vec))
+      val sums = LloydFold.vectors(pts, "vec").pass(table)
+      (0 until table.k).foreach { i =>
+        val cid = table.cid(i)
+        stats.get(cid) match {
+          case None => assert(sums.count(i) == 0, s"cid $cid count")
+          case Some(r) =>
+            assert(sums.count(i) == r.getLong(1), s"cid $cid count")
+            assert(relClose(sums.sse(i), r.getDouble(2)), s"cid $cid SSE")
+            (0 until dim).foreach(j =>
+              assert(relClose(sums.mean(i, j), r.getDouble(3 + j)), s"cid $cid mean($j)"))
+        }
+      }
+      val fit = KMeansND.fit(spark, pts, cs, maxIter = 1, delta = 0.0)
+      assert(relClose(fit.sse, stats.values.map(_.getDouble(2)).sum))
+      fit.centroids.zip(cs).foreach { case (a, b) =>
+        assert(a.cid == b.cid)
+        stats.get(a.cid) match {
+          case None => assert(a.vec sameElements b.vec, s"empty cid ${a.cid} keeps its centroid")
+          case Some(r) => (0 until dim).foreach(j => assert(relClose(a.vec(j), r.getDouble(3 + j))))
+        }
+      }
+    }
+  }
+
+  test("a Lloyd fit runs one single-stage job per iteration and shuffles nothing") {
+    import org.apache.spark.ListenerBusBridge
+    import org.apache.spark.scheduler._
+    import org.apache.spark.storage.StorageLevel
+    import graft.functions.VecFunctions.toDoubleArray
+    /** (jobs, stages per job, shuffle bytes written) while `run` runs. */
+    def shape(run: => Int): (Int, Int, Seq[Int], Long) = {
+      val stages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val written = new java.util.concurrent.atomic.AtomicLong()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = stages.add(e.stageInfos.size)
+        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+          written.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+      ListenerBusBridge.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      val iterations =
+        try run
+        finally {
+          ListenerBusBridge.drain(spark.sparkContext)
+          spark.sparkContext.removeSparkListener(listener)
+        }
+      import scala.jdk.CollectionConverters._
+      (iterations, stages.size, stages.asScala.toSeq, written.get)
+    }
+    val pts2 = Tables.points2d(spark, sf)
+    val ptsN = Tables.embeddings(spark, sf).select(toDoubleArray(col("embedding")).as("vec"))
+    assert(pts2.storageLevel == StorageLevel.NONE && ptsN.storageLevel == StorageLevel.NONE)
+    val fits = Seq(
+      "KMeansLoop" -> (() =>
+        KMeansLoop.fit(spark, pts2, Centroids.k2d, maxIter = 4, delta = 0.0).iterations),
+      "KMeansND" -> (() => KMeansND.fit(spark, ptsN,
+        Centroids.randomInitND(4, 64, seed = 42L, -0.5, 0.5), maxIter = 3, delta = 0.0).iterations))
+    fits.foreach { case (name, fit) =>
+      val (iterations, jobs, stagesPerJob, shuffled) = shape(fit())
+      assert(iterations > 1 && jobs == iterations, s"$name: $jobs jobs for $iterations iterations")
+      assert(stagesPerJob.forall(_ == 1), s"$name: stages per job $stagesPerJob")
+      assert(shuffled == 0L, s"$name wrote $shuffled shuffle bytes")
+    }
+  }
+
+  test("null and malformed points fail the fit with the column's name") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def failure(fit: => Any): String = {
+      val e = intercept[Exception](fit)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    }
+    val xy = StructType(Seq(StructField("x", DoubleType), StructField("y", DoubleType)))
+    val nullY = pointsDf(Seq(Row(1.0, 2.0), Row(3.0, 4.0), Row(5.0, null)), xy)
+    val m2 = failure(KMeansLoop.fit(spark, nullY, Centroids.k2d, maxIter = 2))
+    assert(m2.contains("k-means point column 'y' holds a null coordinate"), m2)
+
+    val vec = StructType(Seq(StructField("vec", ArrayType(DoubleType))))
+    val init = Seq(CentroidND(0, Array(0.0, 0.0)), CentroidND(1, Array(5.0, 5.0)))
+    val nullVec = pointsDf(Seq(Row(Seq(1.0, 2.0)), Row(Seq(3.0, 4.0)), Row(null)), vec)
+    val mn = failure(KMeansND.fit(spark, nullVec, init, maxIter = 2))
+    assert(mn.contains("k-means point column 'vec' holds a null vector"), mn)
+    val shortVec = pointsDf(Seq(Row(Seq(1.0, 2.0)), Row(Seq(3.0, 4.0)), Row(Seq(5.0))), vec)
+    val ms = failure(KMeansND.fit(spark, shortVec, init, maxIter = 2))
+    assert(ms.contains("k-means point column 'vec' holds a vector of length 1; the centroids have 2"),
+      ms)
+    val nullElement = pointsDf(Seq(Row(Seq(1.0, 2.0)), Row(Seq(3.0, null))), vec)
+    val me = failure(KMeansND.fit(spark, nullElement, init, maxIter = 2))
+    assert(me.contains("k-means point column 'vec' holds a vector with a null element at 1"), me)
+  }
+
   test("expression form == relational form on fixture data (J1 cross-check)") {
     val pts = Tables.points2d(spark, sf)
     val exprForm = Assign.withNearest(pts, Centroids.k2d)
@@ -305,7 +467,7 @@ class KMeansSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("n-dim typed-Aggregator fit matches 2-D loop on 2-dim data") {
+  test("n-dim fit matches 2-D loop on 2-dim data") {
     import spark.implicits._
     val pts2 = Tables.points2d(spark, sf)
     val ptsNd = pts2.select(array(col("x"), col("y")).as("vec"))
